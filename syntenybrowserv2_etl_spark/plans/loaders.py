@@ -1,8 +1,13 @@
 """The seven loader programs of the reference, re-expressed as DataFrame plans.
 
-Each loader is read → transform → validate → (DataFrame, warnings) — pure
-logical-plan construction; the caller decides write mode (overwrite/append,
-SURVEY S9/S10) and the write layout. Error channels follow SURVEY §2.6:
+Each loader is read → transform → validate → (DataFrame, warnings); the
+caller decides write mode (overwrite/append, SURVEY S9/S10) and the write
+layout. Most loaders are pure logical-plan construction. Two materialize
+their parsed source once, with an eager ``localCheckpoint``, because several
+actions read it and each would otherwise re-scan and re-parse the file:
+``load_genes_exons`` (the GFF3 attribute map behind gene, exon and both PK
+checks) and ``build_ontology`` (the OBO terms behind the PK check, the
+closure's edges and on_terms). Error channels follow SURVEY §2.6:
 hard aborts raise before any write (V1/V2), skip/warn channels return
 counted side-DataFrames (V3/V4).
 
@@ -69,14 +74,24 @@ def genes_exons_from_gff3(
       - duplicate PK aborts the load (X6 :120-126) — checked by the caller
         via io.assert_no_duplicates before write.
     """
+    return _genes_exons_from_attrs(_parse_gff3_attributes(raw), taxon_id)
+
+
+def _parse_gff3_attributes(raw: DataFrame) -> DataFrame:
+    """9-column GFF3 rows + ``m``, the parsed ``attributes`` map."""
     # A real GFF3 arrives as ONE (often gzipped, unsplittable) file — a
     # 1-task scan that would serialize the per-row attribute parse below
     # no matter the cluster size. Spread before the expression-heavy map
     # parse (guide §2.5 input skew; fan_out is plan-only and a no-op on
     # already-parallel scans). Round 17: q57's 620k-row parse 5.7 s → par.
-    attrs = transforms.fan_out(raw).withColumn(
+    return transforms.fan_out(raw).withColumn(
         "m", transforms.attributes_to_map("attributes")
     )
+
+
+def _genes_exons_from_attrs(
+    attrs: DataFrame, taxon_id: int
+) -> tuple[LoadResult, LoadResult]:
     top, subs = shape.split_hierarchy_level(attrs, F.col("m").getItem("Parent"))
     dbxref = transforms.first_element(F.split(F.col("m").getItem("Dbxref"), ","))
     genes_ok = top.filter(dbxref.isNotNull() & (F.length(dbxref) > 0))
@@ -131,9 +146,16 @@ def genes_exons_from_gff3(
 def load_genes_exons(
     spark: SparkSession, path: str, taxon_id: int
 ) -> tuple[LoadResult, LoadResult]:
-    """GFF3 file → (gene, exon); see genes_exons_from_gff3 for semantics."""
+    """GFF3 file → (gene, exon); see genes_exons_from_gff3 for semantics.
+
+    The parsed attribute frame feeds four actions (both PK checks and both
+    writes), each of which would otherwise re-scan the file and re-run the
+    map parse, so it is materialized once here. ``genes_exons_from_gff3``
+    stays lazy for callers that hand it an in-memory frame.
+    """
     raw = text_sources.read_gff3(spark, path)
-    return genes_exons_from_gff3(raw, taxon_id)
+    attrs = _parse_gff3_attributes(raw).localCheckpoint(eager=True)
+    return _genes_exons_from_attrs(attrs, taxon_id)
 
 
 # ---------------------------------------------------------------------------
@@ -155,7 +177,7 @@ def load_synteny_blocks(spark: SparkSession, path: str) -> LoadResult:
     bad = raw.filter(
         F.col("block_id").isNull() | ~F.col("block_id").startswith("ID=SynBlock")
     )
-    if bad.limit(1).count() > 0:
+    if not bad.isEmpty():
         raise io.LoadAborted(
             "synteny block_id without 'ID=SynBlock' prefix (V2 abort, "
             "reference src/import_synteny_blocks.py:63-70)"
@@ -351,8 +373,9 @@ def build_ontology(
     dedup last-write-wins on (gene_id, ontology_id) — taxonid NOT in the
     key (Q7 :175-183).
     """
-    term_dfs = [obo.read_obo_terms(spark, p) for p in obo_paths]
-    terms_all = shape.accumulate(term_dfs)
+    # One scan over every file; the parsed terms feed the PK check, the edge
+    # set and on_terms, so they are materialized once.
+    terms_all = obo.read_obo_terms(spark, obo_paths).localCheckpoint(eager=True)
     # duplicate term id across files → X6 abort (reference :212-224)
     io.assert_no_duplicates(terms_all.select("id"), ["id"], "on_terms")
     edges = obo.obo_edges(terms_all)

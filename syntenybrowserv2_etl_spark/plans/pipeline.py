@@ -80,6 +80,8 @@ def build_database(spark: SparkSession, inputs: PipelineInputs, out_dir: str) ->
         from ..operators import shape
 
         parts = [loaders.load_synteny_blocks(spark, p).df for p in inputs.synteny_tsvs]
+        if not parts:
+            return []
         df = io.upsert_dedup(shape.accumulate(parts), schemas.SYNTENIC_BLOCK_PK)
         n = io.write_table(
             df,

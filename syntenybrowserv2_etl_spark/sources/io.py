@@ -67,8 +67,11 @@ def assert_no_duplicates(df: DataFrame, pk: list[str], table: str) -> None:
 
     Reference: src/import_genes_exons.py:120-126,130-136 (IntegrityError →
     rollback + abort). Implemented as a pre-write check: group by PK, any
-    count > 1 ⇒ raise. ``limit(1)`` keeps the failure probe cheap — AQE
-    stops the scan early once one offending group is found.
+    count > 1 ⇒ raise. Cost: one full evaluation of ``df``'s plan plus a
+    shuffle of its PK columns — the ``groupBy`` must see every row before
+    any group exists, so ``limit(1)`` only trims what is collected, never
+    the scan. Callers that also write ``df`` should hand it a materialized
+    source (see plans/loaders), or the check re-runs the whole parse.
     """
     dup = df.groupBy(*pk).count().filter(F.col("count") > 1).limit(1).collect()
     if dup:

@@ -20,8 +20,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def read_obo_terms(spark: SparkSession, path: str) -> DataFrame:
+def read_obo_terms(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """Parse OBO → one row per non-obsolete [Term] stanza.
+
+    ``path`` may list several files: they are read by one scan, and stanzas
+    are numbered within each file.
 
     Output: (file, stanza, id, name, namespace, def, is_a ARRAY<STRING>)
     where is_a holds bare parent ids (`` ! comment`` suffix stripped —
@@ -31,12 +34,19 @@ def read_obo_terms(spark: SparkSession, path: str) -> DataFrame:
     # ``.option("wholetext", "true")`` spelling is silently ignored for the
     # text source and the file comes back line-split, collapsing every pos
     # to 0 and breaking stanza assignment.
+    # Lines are keyed by ``doc``, the file's row, not by its name: a file
+    # listed twice is then parsed twice, and its terms collide in the
+    # caller's X6 check instead of merging silently.
     lines = (
         spark.read.text(path, wholetext=True)
         .withColumn("file", F.input_file_name())
-        .select("file", F.posexplode(F.split("value", r"\r?\n")).alias("pos", "line"))
+        .withColumn("doc", F.monotonically_increasing_id())
+        .select(
+            "file", "doc",
+            F.posexplode(F.split("value", r"\r?\n")).alias("pos", "line"),
+        )
     )
-    w = Window.partitionBy("file").orderBy("pos")
+    w = Window.partitionBy("doc").orderBy("pos")
     # Running count of stanza-header lines = stanza id; the header's own text
     # identifies stanza kind ([Term] vs [Typedef] — the latter ignored,
     # reference src/import_ontology.py:204-205).
@@ -45,6 +55,7 @@ def read_obo_terms(spark: SparkSession, path: str) -> DataFrame:
     )
     kv = lines.select(
         "file",
+        "doc",
         "stanza",
         F.col("line").startswith("[").alias("is_header"),
         F.col("line").alias("line"),
@@ -56,7 +67,7 @@ def read_obo_terms(spark: SparkSession, path: str) -> DataFrame:
         return F.max(F.when(F.col("key") == key, F.col("value"))).alias(key)
 
     stanzas = (
-        kv.groupBy("file", "stanza")
+        kv.groupBy("file", "doc", "stanza")
         .agg(
             F.max(F.when(F.col("is_header"), F.col("line"))).alias("header"),
             first_of("id"),

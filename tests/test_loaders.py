@@ -292,6 +292,20 @@ def test_ontology(spark, fixtures_dir):
     assert set(gmap_rows) == {("G1", "c"), ("G2", "b")}
 
 
+def test_ontology_duplicate_terms_abort(spark, fixtures_dir, tmp_path):
+    """X6 across OBO files (reference :212-224): a term id defined in two
+    files aborts, also when the same file is listed twice, which the
+    single multi-file scan must not merge into one parse."""
+    import shutil
+
+    obo = f"{fixtures_dir}/onto.obo"
+    copy = str(tmp_path / "copy.obo")
+    shutil.copy(obo, copy)
+    for paths in ([obo, copy], [obo, obo]):
+        with pytest.raises(io.LoadAborted, match="on_terms"):
+            loaders.build_ontology(spark, paths, [])
+
+
 def test_jsonl_source_routes_bad_records(spark, tmp_path):
     """read_jsonl: malformed lines and rows missing required fields land
     in the bad channel with a reason; good rows carry the declared schema

@@ -8,8 +8,23 @@ import pytest
 from syntenybrowserv2_etl_spark.plans import pipeline
 
 
-def test_build_database(spark, fixtures_dir, tmp_path):
-    inputs = pipeline.PipelineInputs(
+FIXTURE_COUNTS = {
+    "gene": 3,
+    "exon": 4,
+    "syntenic_block": 6,
+    "cytogenetic_band": 3,
+    "feature": 3,
+    "snp_variant": 4,
+    "homolog": 6,
+    "on_terms": 6,
+    "on_pairs": 6,
+    "gene_ontology_map": 2,
+}
+
+
+def _fixture_inputs(fixtures_dir) -> pipeline.PipelineInputs:
+    """Every domain fixture, one species: all ten tables get rows."""
+    return pipeline.PipelineInputs(
         species=[
             pipeline.SpeciesInputs(
                 taxon_id=10090,
@@ -24,20 +39,12 @@ def test_build_database(spark, fixtures_dir, tmp_path):
         obo_paths=[f"{fixtures_dir}/onto.obo"],
         gaf_loads=[(f"{fixtures_dir}/annotations.gaf", 10090)],
     )
+
+
+def test_build_database(spark, fixtures_dir, tmp_path):
     out = str(tmp_path / "db")
-    counts = pipeline.build_database(spark, inputs, out)
-    assert counts == {
-        "gene": 3,
-        "exon": 4,
-        "syntenic_block": 6,
-        "cytogenetic_band": 3,
-        "feature": 3,
-        "snp_variant": 4,
-        "homolog": 6,
-        "on_terms": 6,
-        "on_pairs": 6,
-        "gene_ontology_map": 2,
-    }
+    counts = pipeline.build_database(spark, _fixture_inputs(fixtures_dir), out)
+    assert counts == FIXTURE_COUNTS
     # written layout is readable and partition-pruned by taxon
     gene = spark.read.parquet(f"{out}/gene")
     assert gene.filter("gene_taxonid = 10090").count() == 3
@@ -72,12 +79,11 @@ def test_build_database_single_computation(spark, fixtures_dir, tmp_path, monkey
     ``Observation`` inside the write job itself. Pin it: forbid ``count()``
     entirely during the build and check the reported numbers still match.
     """
-    from pyspark.sql import DataFrame
-
     def _no_count(self):
         raise AssertionError("df.count() called during build — plan recomputed")
 
-    monkeypatch.setattr(DataFrame, "count", _no_count)
+    # patch the concrete class: classic DataFrame overrides the base's count
+    monkeypatch.setattr(type(spark.range(0)), "count", _no_count)
     inputs = pipeline.PipelineInputs(
         species=[
             pipeline.SpeciesInputs(
@@ -99,6 +105,100 @@ def test_build_database_single_computation(spark, fixtures_dir, tmp_path, monkey
         "syntenic_block": 6,
         "cytogenetic_band": 3,
     }
+
+
+def test_concurrent_build_equals_serial(spark, fixtures_dir, tmp_path, monkeypatch):
+    """The seven table families run on threads of one session and share its
+    checkpointed frames. The written tables must not depend on that: a
+    build with one worker thread writes the same rows, table by table."""
+    from collections import Counter
+
+    def tables(out: str) -> dict[str, Counter]:
+        return {
+            name: Counter(tuple(r) for r in spark.read.parquet(f"{out}/{name}").collect())
+            for name in FIXTURE_COUNTS
+        }
+
+    concurrent_out = str(tmp_path / "concurrent")
+    assert pipeline.build_database(
+        spark, _fixture_inputs(fixtures_dir), concurrent_out
+    ) == FIXTURE_COUNTS
+    real_pool = pipeline.cf.ThreadPoolExecutor
+    monkeypatch.setattr(
+        pipeline.cf, "ThreadPoolExecutor", lambda max_workers: real_pool(max_workers=1)
+    )
+    serial_out = str(tmp_path / "serial")
+    assert pipeline.build_database(
+        spark, _fixture_inputs(fixtures_dir), serial_out
+    ) == FIXTURE_COUNTS
+    concurrent, serial = tables(concurrent_out), tables(serial_out)
+    for name in FIXTURE_COUNTS:
+        assert concurrent[name] == serial[name], name
+        assert sum(serial[name].values()) == FIXTURE_COUNTS[name], name
+
+
+def _jobs(sc):
+    """(status store, its jobs), read after the listener bus drains."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    seq = store.jobsList(None)
+    return store, [seq.apply(i) for i in range(seq.size())]
+
+
+def _scan_records_since(sc, after_job: int) -> int:
+    """Input records of the file-scan stages of jobs after ``after_job``.
+
+    A stage counts as a scan when its RDD graph holds a ``FileScanRDD``;
+    reads of checkpointed blocks also add to ``inputRecords``, so they are
+    told apart by that node, not by the metric.
+    """
+    store, jobs = _jobs(sc)
+    stage_ids = {
+        job.stageIds().apply(k)
+        for job in jobs
+        if job.jobId() > after_job
+        for k in range(job.stageIds().size())
+    }
+
+    def node_names(cluster) -> list[str]:
+        nodes, kids = cluster.childNodes(), cluster.childClusters()
+        names = [nodes.apply(i).name() for i in range(nodes.size())]
+        for i in range(kids.size()):
+            names += node_names(kids.apply(i))
+        return names
+
+    total = 0
+    for sid in stage_ids:
+        stage = store.lastStageAttempt(sid)
+        if stage.status().toString() == "SKIPPED":
+            continue
+        if "FileScanRDD" in node_names(store.operationGraphForStage(sid).rootCluster()):
+            total += stage.inputRecords()
+    return total
+
+
+def test_build_reads_each_source_once(spark, fixtures_dir, tmp_path):
+    """The genes GFF3 feeds both PK checks and both writes, the OBO terms
+    feed the PK check, the closure and on_terms: each file must still be
+    scanned exactly once per build."""
+    sc = spark.sparkContext
+    start = max((job.jobId() for job in _jobs(sc)[1]), default=-1)
+    genes = f"{fixtures_dir}/genes.gff3"
+    inputs = pipeline.PipelineInputs(
+        species=[pipeline.SpeciesInputs(taxon_id=10090, genes_gff3=genes)],
+        synteny_tsvs=[],
+        homolog_tsvs=[],
+        vcf_paths=[],
+        obo_paths=[f"{fixtures_dir}/onto.obo"],
+        gaf_loads=[],
+    )
+    counts = pipeline.build_database(spark, inputs, str(tmp_path / "db"))
+    assert counts["gene"] == 3 and counts["on_pairs"] == 6
+    with open(genes) as f:
+        gff3_rows = sum(1 for line in f if line.strip() and not line.startswith("#"))
+    # the OBO scan is wholetext: one record per file
+    assert _scan_records_since(sc, start) == gff3_rows + 1
 
 
 def test_build_bench_small_deterministic(spark, monkeypatch, capsys):

@@ -62,6 +62,32 @@ def test_closure_matches_bruteforce(spark, edges, method):
     assert got == py_closure(edges)
 
 
+def test_closure_chain_boundaries_one_action_per_round(spark, monkeypatch):
+    """Chains of 2^k-1, 2^k and 2^k+1 edges sit on either side of the
+    doubling early exit (max new __dist < 2^k). The closure must match the
+    reference on each, and issue no action besides its checkpoints: the
+    convergence probe rides the checkpoint job."""
+    lengths = sorted({2**k + d for k in range(1, 5) for d in (-1, 0, 1)})
+    chains = {n: {(i + 1, i) for i in range(n)} for n in lengths}
+    frames = {
+        n: spark.createDataFrame(sorted(e), ["child", "parent"])
+        for n, e in chains.items()
+    }
+
+    def _no_action(self, *args, **kwargs):
+        raise AssertionError("transitive_closure ran an action besides its checkpoints")
+
+    # patch the concrete class: classic DataFrame overrides the base's methods
+    frame_cls = type(frames[lengths[0]])
+    with monkeypatch.context() as m:
+        for name in ("first", "collect", "count", "isEmpty"):
+            m.setattr(frame_cls, name, _no_action)
+        closures = {n: closure.transitive_closure(df) for n, df in frames.items()}
+    for n, cl in closures.items():
+        got = {(r["ancestor"], r["descendant"]) for r in cl.collect()}
+        assert got == py_closure(chains[n]), n
+
+
 @given(
     left=st.lists(
         st.tuples(st.integers(0, 3), st.integers(0, 50)), min_size=1, max_size=15
